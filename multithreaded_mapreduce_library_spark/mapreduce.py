@@ -67,10 +67,14 @@ def mr_partitioner(key: str, num_partitions: int) -> int:
 
 def emit_filter(pairs: Iterable[Pair]) -> Iterator[Pair]:
     """The MR_Emit guard: drop pairs with NULL/empty keys
-    (mapreduce.c:205-207)."""
+    (mapreduce.c:205-207). Any other non-``str`` key raises ``TypeError``
+    here rather than deep inside the djb2 partitioner."""
     for key, value in pairs:
-        if key:
-            yield key, value
+        if isinstance(key, str):
+            if key:
+                yield key, value
+        elif key is not None:
+            raise TypeError(f"mr_run: mapper keys must be str or None, got {type(key).__name__}")
 
 
 def mr_run(
@@ -91,6 +95,8 @@ def mr_run(
     reference knob but Spark's scheduler replaces the thread pool
     (threadpool.c:46-73 — not ported, per SURVEY.md §7.2 non-goals).
     """
+    if num_partitions < 1:
+        raise ValueError(f"mr_run: num_partitions must be >= 1, got {num_partitions}")
     sc = spark.sparkContext
     if isinstance(inputs, RDD):
         records = inputs

@@ -5,8 +5,10 @@ from __future__ import annotations
 
 from collections import Counter
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from py4j.protocol import Py4JJavaError
 
 from multithreaded_mapreduce_library_spark.mapreduce import (
     djb2,
@@ -14,6 +16,7 @@ from multithreaded_mapreduce_library_spark.mapreduce import (
     mr_partitioner,
     mr_run,
     wordcount_mapper,
+    wordcount_reducer,
 )
 
 
@@ -46,7 +49,7 @@ def test_djb2_wraps_to_64_bits(key):
 # ---------------------------------------------------------------------------
 
 def test_emit_filter_drops_empty_keys():
-    pairs = [("a", "1"), ("", "x"), ("b", "2"), ("", ""), ("a", "3")]
+    pairs = [("a", "1"), ("", "x"), ("b", "2"), ("", ""), (None, "y"), ("a", "3")]
     assert list(emit_filter(pairs)) == [("a", "1"), ("b", "2"), ("a", "3")]
 
 
@@ -159,3 +162,32 @@ def test_mr_run_from_files(spark, tmp_path):
         mr_run(spark, [str(f1), str(f2)], file_mapper, reducer, num_partitions=3).collect()
     )
     assert out == {"hello": 2, "world": 2}
+
+
+# ---------------------------------------------------------------------------
+# input validation: bad arguments fail loudly, not as lost pairs or a
+# djb2 AttributeError deep inside a task
+# ---------------------------------------------------------------------------
+
+@pytest.mark.parametrize("n", [0, -2])
+def test_mr_run_rejects_nonpositive_num_partitions(spark, n):
+    rdd = spark.sparkContext.parallelize(["a b"], 1)
+    with pytest.raises(ValueError, match="num_partitions"):
+        mr_run(spark, rdd, wordcount_mapper, wordcount_reducer, num_partitions=n)
+
+
+@pytest.mark.parametrize("key, type_name", [(7, "int"), (b"k", "bytes"), (0, "int")])
+def test_emit_filter_rejects_non_str_keys(key, type_name):
+    with pytest.raises(TypeError, match=f"mr_run.*{type_name}"):
+        list(emit_filter([("a", "1"), (key, "1")]))
+
+
+def test_mr_run_non_str_key_names_mr_run_and_type(spark):
+    rdd = spark.sparkContext.parallelize(["a", "b"], 2)
+
+    def int_mapper(line):
+        yield len(line), "1"
+
+    with pytest.raises(Py4JJavaError, match="TypeError: mr_run.*int"):
+        mr_run(spark, rdd, int_mapper, wordcount_reducer, num_partitions=3).collect()
+
