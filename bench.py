@@ -3,9 +3,13 @@
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Queries are forced end-to-end with the noop sink (full computation, no
-driver-side collect). One tiny warmup job amortizes JVM/codegen startup so
-the numbers reflect steady-state operator cost.
+This module is also the timing core every harness calls (scripts/
+time_queries.py, scripts/scale_probe.py, scripts/bench_reference.py):
+`warm_up` takes first-touch JVM/codegen cost out of the timings, and
+`time_query` times one query under the single clock rule — the clock
+starts before the builder and stops after the noop-sink write, so
+build-time Spark jobs (training collects, broadcast builds) are counted
+like execution, as a MapReduce job is charged for every phase it runs.
 """
 
 from __future__ import annotations
@@ -45,10 +49,31 @@ HEADLINE = (
 )
 
 
-# Queries whose BUILDER performs Spark actions (the r15 narrow-assign
-# Lloyd family trains eagerly at plan-build time): their clock starts
-# before the builder so the training jobs are inside the timed region.
-EAGER_BUILD = frozenset({"sim_topk_ivf_quantized"})
+def warm_up(spark, specs, sf_dir: str) -> None:
+    """Touch the JVM, codegen and the parquet reader on the fact table
+    once (fixture files have a single row group, so scans are
+    single-task), taking first-touch JIT out of every later timing."""
+    for name in ("agg_stats", "filter_project"):
+        specs[name].builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+
+def time_query(spark, spec, sf_dir: str, iters: int) -> list[float]:
+    """Wall seconds of `iters` runs of one query: builder plus forced
+    execution (noop sink — full computation, no driver-side collect).
+    Callers take the best run: the first pays one-time whole-stage
+    codegen, and multi-stage plans show scheduling jitter. Jobs are
+    labelled `bench:<name>` so an event-log reading maps stages to
+    queries; the label is set outside the timed region."""
+    spark.sparkContext.setJobDescription(f"bench:{spec.name}")
+    runs = []
+    try:
+        for _ in range(iters):
+            t0 = time.perf_counter()
+            spec.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            runs.append(time.perf_counter() - t0)
+    finally:
+        spark.sparkContext.setJobDescription(None)
+    return runs
 
 
 def bench_ann_serving(spark, sf_dir: str, iters: int) -> dict[str, float]:
@@ -59,7 +84,8 @@ def bench_ann_serving(spark, sf_dir: str, iters: int) -> dict[str, float]:
     (trained cell assignment + int8 codes) is built ONCE and amortized
     across every query batch. Here the index materializes to parquet
     once (`index_build`), then probe→shortlist→rerank runs against the
-    materialized index alone (`serve`, best-of-iters). The headline
+    materialized index alone (`serve`: `time_query`'s clock, so the
+    shortlist builder is included; best-of-iters). The headline
     total still carries the END-TO-END number; this block is reported
     alongside it. Equivalence of the two paths is pinned by
     tests/test_pq.py::test_ivfq_serving_over_materialized_index_matches_end_to_end.
@@ -72,6 +98,7 @@ def bench_ann_serving(spark, sf_dir: str, iters: int) -> dict[str, float]:
         _ivfq_shortlist_ids,
         exact_cosine_rerank,
     )
+    from multithreaded_mapreduce_library_spark.registry import QuerySpec
 
     tmp = tempfile.mkdtemp(prefix="ivfq_index_")
     try:
@@ -79,14 +106,14 @@ def bench_ann_serving(spark, sf_dir: str, iters: int) -> dict[str, float]:
         _ivfq_coded(spark, sf_dir).write.mode("overwrite").parquet(tmp)
         index_build = time.perf_counter() - t0
         idx = spark.read.parquet(tmp)
-        best = float("inf")
-        for _ in range(iters):
-            df = exact_cosine_rerank(
-                spark, sf_dir, _ivfq_shortlist_ids(spark, sf_dir, coded=idx), 3
-            )
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
+        serve = QuerySpec(
+            name="ann_serving",
+            builder=lambda s, d: exact_cosine_rerank(
+                s, d, _ivfq_shortlist_ids(s, d, coded=idx), 3
+            ),
+            oracle=None,
+        )
+        best = min(time_query(spark, serve, sf_dir, iters))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return {"index_build": round(index_build, 3), "serve": round(best, 3)}
@@ -132,17 +159,8 @@ def main() -> None:
     spark = get_spark(app_name="bench")
     specs = load_all()
 
-    # warmup: touch the JVM, codegen, and the parquet reader on the fact
-    # table once (fixture files have a single row group, so scans are
-    # single-task; warmup takes the first-touch JIT out of the timings)
-    specs["agg_stats"].builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    specs["filter_project"].builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    warm_up(spark, specs, sf_dir)
 
-    # best-of-N per query (default 3): the first run of a pipeline pays
-    # one-time whole-stage-codegen compilation (~0.5-1s for the wide LSH
-    # plans), and multi-stage plans (waiting_orders) show ±0.5s
-    # scheduling jitter at local[32] — best-of-3 reports steady-state
-    # cost, which is what scales with data volume.
     iters = int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "3"))
     # Machine-load provenance: every bench dispute in rounds 3-5 turned
     # out to be a loaded box (single loaded runs read 50-100% high vs the
@@ -167,38 +185,12 @@ def main() -> None:
     # OUTSIDE the timed regions — additive, timing-neutral.
     query_wall: dict[str, list[float]] = {}
     for name in HEADLINE:
-        # Guide §1.5: label jobs so a UI/eventlog reading of the bench
-        # maps stages to queries. Thread-local, set OUTSIDE the timed
-        # region (one py4j call per query, before the clock starts).
-        spark.sparkContext.setJobDescription(f"bench:{name}")
         q_wall0 = time.time()
-        best = float("inf")
-        for _ in range(iters):
-            # Timed region (r15 protocol note): for PURE-LAZY builders the
-            # clock starts after the builder, as in every prior round —
-            # plan construction/analysis is driver-side Python/Catalyst
-            # work that amortizes completely at 100 TB (corpus_curation's
-            # plan alone costs ~3s to ANALYZE but ~0.5s to RUN at sf0.1)
-            # and was never part of the 14-round series. For builders that
-            # run Spark JOBS eagerly (the narrow-assign Lloyd family
-            # trains via k-row centroid collects at build time) the clock
-            # starts BEFORE the builder, so training is counted; that
-            # conservatively includes their analysis time too — the
-            # reported number can only be high, never low.
-            if name in EAGER_BUILD:
-                t0 = time.perf_counter()
-                df = specs[name].builder(spark, sf_dir)
-            else:
-                df = specs[name].builder(spark, sf_dir)
-                t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
+        timings[name] = round(min(time_query(spark, specs[name], sf_dir, iters)), 3)
         query_wall[name] = [round(q_wall0, 1), round(time.time(), 1)]
     spark.sparkContext.setJobDescription("bench:ann_serving")
 
     ann_serving = bench_ann_serving(spark, sf_dir, iters)
-    spark.sparkContext.setJobDescription(None)
 
     # Trailing canary (r19 lesson, VERDICT r19 #3): steal bursts WITHIN a
     # run on this host class, so the closing-number protocol brackets

@@ -559,8 +559,8 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- IVF centroid training (one exact Lloyd refinement) --------------------
 K_CELLS = 8
-# Measured narrow-argmin envelope (scripts/probe_lloyd_k_sweep.py, PERF.md
-# r16: k-sweep 8/16/32/64 on the 16x fixture): the literal argmin's
+# Measured narrow-argmin envelope (PERF.md r16: k-sweep 8/16/32/64 on
+# the 16x fixture): the literal argmin's
 # driver-side eager build grows with k and crosses ABOVE the window path
 # at k ~ 16 under single consumption, while both stay bit-identical at
 # every k. Callers that don't choose a strategy get narrow only inside
@@ -886,8 +886,8 @@ def lloyd_inertia_fx(spark: SparkSession, sf_dir: str, rounds: int) -> int:
 
 
 # --- embedding-space outlier ranking (landed r18; staged+validated r17 in
-# operators/staging.py per the pre-landing protocol — oracle differential
-# on seeds 42 AND 1201, hand-checked 9-vector micro-corpus, plan pins) ----
+# the since-retired staging queue — oracle differential on seeds 42 AND
+# 1201, hand-checked 9-vector micro-corpus, plan pins; PERF.md r17) -------
 
 TOP_OUTLIERS = 5
 

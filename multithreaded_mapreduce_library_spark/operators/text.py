@@ -801,8 +801,7 @@ def bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 # lineage depth against checkpoint materializations (each one vocab-scale
 # write+read kept in executor memory/disk); 3 keeps the re-checkpoint
 # path EXERCISED by the default 6-round contract query rather than only
-# by the scale probe (scripts/probe_bpe_rounds.py logs the flat-per-round
-# evidence in PERF.md).
+# at scale (the flat-per-round evidence is in PERF.md r14).
 BPE_CHECKPOINT_EVERY = 3
 
 
@@ -813,9 +812,9 @@ def _bpe_train_rules(
     checkpoint_every: int = BPE_CHECKPOINT_EVERY,
     on_round=None,
 ) -> list[tuple]:
-    """The BPE merge-rule training loop shared by bpe_train (the
-    contract query, default rounds) and scripts/probe_bpe_rounds.py (the
-    per-round-flatness scale probe, many rounds). Returns [(step, lhs,
+    """The BPE merge-rule training loop behind bpe_train (the contract
+    query, default rounds); many-round runs of it gave the
+    per-round-flatness evidence in PERF.md r14. Returns [(step, lhs,
     rhs, merged, pair_count), ...]. One corpus-scale wordcount shuffle
     collapses the corpus into a vocab-sized (freq, symbol-array) table,
     localCheckpoint'ed once; each merge round is then vocab-scale: pair
@@ -828,8 +827,8 @@ def _bpe_train_rules(
     live storage stays O(vocab), not O(rounds). ``on_round(step,
     seconds)``, when given, receives each round's wall time measured
     over the argmax job — where any live fold layers and the pending
-    lazy checkpoint actually materialize — feeding the flat-per-round
-    evidence probe (scripts/probe_bpe_rounds.py -> PERF.md)."""
+    lazy checkpoint actually materialize (the per-round timings behind
+    PERF.md r14)."""
     vocab = (
         docs.select(F.explode(tokens("text")).alias("w"))
         .groupBy("w")
@@ -1022,8 +1021,8 @@ def bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # bigram language-model predictability scoring (landed r17; staged+validated
-# r16 in operators/staging.py per the pre-landing protocol — oracle
-# differential on seeds 42 AND 99, hand-checked micro-corpus, plan pins)
+# r16 in the since-retired staging queue — oracle differential on seeds
+# 42 AND 99, hand-checked micro-corpus, plan pins; PERF.md r16)
 # ---------------------------------------------------------------------------
 
 LM_BIGRAM_ORACLE = f"""
@@ -1150,10 +1149,10 @@ def lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# cross-corpus trigram novelty (landed r18; staged+validated r17 in
-# operators/staging.py per the pre-landing protocol — oracle differential
-# on seeds 42 AND 1201, hand-checked micro-corpus, plan pins; evidence in
-# docs/r18_plan.md / the r17 PERF.md entry)
+# cross-corpus trigram novelty (landed r18; staged+validated r17 in the
+# since-retired staging queue — oracle differential on seeds 42 AND 1201,
+# hand-checked micro-corpus, plan pins; evidence in docs/r18_plan.md /
+# the r17 PERF.md entry)
 # ---------------------------------------------------------------------------
 
 DOC_NGRAM_NOVELTY_ORACLE = f"""

@@ -288,10 +288,17 @@ def _cogroup_buckets(spark: SparkSession) -> int:
     spark.graft.cogroup.buckets when a deployment wants a different
     batch/memory trade (each bucket is one Arrow stream in one task).
     Output is invariant to B — each custkey lands wholly in one bucket.
+    The override must be a positive integer: pmod by 0 is NULL, which
+    would put every row into one bucket.
     """
     explicit = spark.conf.get("spark.graft.cogroup.buckets", None)
     if explicit is not None:
-        return int(explicit)
+        n = int(explicit) if explicit.strip().isdigit() else 0
+        if n < 1:
+            raise ValueError(
+                f"spark.graft.cogroup.buckets must be a positive integer, got {explicit!r}"
+            )
+        return n
     return max(512, 16 * spark.sparkContext.defaultParallelism)
 
 

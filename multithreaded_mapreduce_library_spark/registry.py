@@ -103,13 +103,14 @@ _PRIORITY = (
     # driver run re-greened its 6-changed + 44-oldest-green prefix
     # (CORRECTNESS_r22.json, 50/50), so the r23 fill is the 11 displaced
     # r18-greens (quarantine_malformed .. unpivot_measures), which must
-    # lead under the four-round bound, + the 37 oldest r19-greens with
-    # the 2-query changed set below: mr_wordcount and mr_inverted_index,
-    # whose facade path (mapreduce.py input validation) changed. A
-    # change confined to mapreduce.py escapes the QUERY_HASHES
-    # fingerprint, so they are declared here by hand. Changed-set cap
-    # this round: 39 (50 minus the 11 r18-greens); the r24 forecast
-    # leaves a cap of 40 (rotate_prefix.py).
+    # lead under the four-round bound, + the 36 oldest r19-greens with
+    # the 3-query changed set below: mr_wordcount and mr_inverted_index,
+    # whose facade path (mapreduce.py input validation) changed, and
+    # cogroup_reconcile, whose bucket-count helper (_cogroup_buckets)
+    # now validates its override. A change confined to a helper escapes
+    # the QUERY_HASHES fingerprint, so they are declared here by hand.
+    # Changed-set cap this round: 39 (50 minus the 11 r18-greens); the
+    # r24 forecast leaves a cap of 39 (rotate_prefix.py).
     # The optimization-round regime (established r21): a gated query
     # whose builder text changes for PERFORMANCE (output-identical,
     # oracle-proven at sf0.01+sf0.1 before landing) takes a changed-set
@@ -117,18 +118,17 @@ _PRIORITY = (
     # refresh in the same commit — test_changed_hashes_are_declared
     # enforces this mechanically. Current spend: see the (1) marker
     # below; the displaced r18-greens lead the r23 refresh and stay
-    # inside the four-round staleness bound. No new operators; the
-    # staging queue stays empty. Pinned by
+    # inside the four-round staleness bound. No new operators. Pinned by
     # tests/test_registry_oracle.py::test_gate_prefix_bounds_staleness.
     # Do not pad with trivial variants.
-    # (1) new/changed in r23 (2):
-    "mr_wordcount", "mr_inverted_index",
+    # (1) new/changed in r23 (3):
+    "mr_wordcount", "mr_inverted_index", "cogroup_reconcile",
     # (2) last green in r18 (11):
     "quarantine_malformed", "repetition_ngram", "sample_hash",
     "scalar_subquery", "source_divergence", "stream_dedup_docs",
     "stream_dedup_minhash", "stream_incremental_agg", "stream_lm_score",
     "stream_upsert", "unpivot_measures",
-    # (2) last green in r19 (37):
+    # (2) last green in r19 (36):
     "compact_apply", "compact_plan", "corr_stats", "correlated_subquery",
     "dedup_semantic", "dedup_semantic_incremental", "dist_moments",
     "event_funnel", "group_cube", "grouping_sets", "ivf_train_centroids",
@@ -138,10 +138,10 @@ _PRIORITY = (
     "mmr_rerank", "multimodal_decode", "multimodal_frame_sample",
     "quality_score", "sample_stratified", "sequence_packing", "sessionize",
     "sim_lsh_buckets", "sim_near_dup", "sim_topk_bruteforce",
-    "sim_topk_ivf_trained", "stream_dedup", "stream_dedup_semantic",
+    "sim_topk_ivf_trained", "stream_dedup",
     # --- end of gate prefix (50) ----------------------------------------
-    # rotated out, last green r19 (10):
-    "stream_session", "stream_sliding_watermark",
+    # rotated out, last green r19 (11):
+    "stream_dedup_semantic", "stream_session", "stream_sliding_watermark",
     "stream_stateful_running_max", "stream_static_join", "stream_stream_join",
     "stream_tumbling", "time_tumbling", "token_stats", "udtf_tokenize",
     "window_range_frame",
@@ -173,22 +173,21 @@ _PRIORITY = (
     "setop_union", "sim_topk_ivf", "sim_topk_multiprobe", "small_qty_revenue",
     "split_contamination_gate", "sql_interface", "stream_transitions",
     "tf_idf", "waiting_orders",
-    # rotated out, last green r22 (50):
+    # rotated out, last green r22 (49):
     "agg_stats", "bm25_search", "bpe_train", "calendar_fill", "case_when",
-    "cogroup_reconcile", "conditional_agg", "contamination_check",
-    "corpus_curation", "count_distinct", "dataset_split", "dedup_clusters",
-    "dedup_exact", "dedup_keep_first", "dedup_minhash_incremental",
-    "dedup_ngram_jaccard", "dedup_simhash", "distinct_rows",
-    "doc_fingerprint", "doc_ngram_novelty", "embedding_centroids",
-    "embedding_outliers", "filter_project", "grouped_map_zscore",
-    "having_filter", "hybrid_retrieval", "incremental_agg", "join_anti",
-    "join_asof_window", "lateral_posexplode", "merge_upsert",
-    "multi_count_distinct", "multimodal_features", "multimodal_metadata",
-    "multimodal_resize", "orderby_limit", "pii_redact", "profile_table",
-    "sim_topk_ivf_quantized", "sim_topk_ivfpq", "sim_topk_pq", "time_sliding",
-    "top_supplier", "variant_extract", "volume_shipping",
-    "window_distribution", "window_first_last", "window_moving_avg",
-    "window_topk_per_group", "wordcount",
+    "conditional_agg", "contamination_check", "corpus_curation",
+    "count_distinct", "dataset_split", "dedup_clusters", "dedup_exact",
+    "dedup_keep_first", "dedup_minhash_incremental", "dedup_ngram_jaccard",
+    "dedup_simhash", "distinct_rows", "doc_fingerprint", "doc_ngram_novelty",
+    "embedding_centroids", "embedding_outliers", "filter_project",
+    "grouped_map_zscore", "having_filter", "hybrid_retrieval",
+    "incremental_agg", "join_anti", "join_asof_window", "lateral_posexplode",
+    "merge_upsert", "multi_count_distinct", "multimodal_features",
+    "multimodal_metadata", "multimodal_resize", "orderby_limit", "pii_redact",
+    "profile_table", "sim_topk_ivf_quantized", "sim_topk_ivfpq",
+    "sim_topk_pq", "time_sliding", "top_supplier", "variant_extract",
+    "volume_shipping", "window_distribution", "window_first_last",
+    "window_moving_avg", "window_topk_per_group", "wordcount",
 )
 
 

@@ -1478,7 +1478,7 @@ _register_stream_dedup_semantic()
 
 # ---------------------------------------------------------------------------
 # streaming bigram-LM quality gate (landed r18; staged+validated r17 in
-# operators/staging.py — oracle differential on seeds 42 AND 1201,
+# the since-retired staging queue — oracle differential on seeds 42 AND 1201,
 # hand-checked micro-corpus with the real h31 split, multi-batch settle
 # pinned in tests/test_streaming.py)
 # ---------------------------------------------------------------------------

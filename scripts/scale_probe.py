@@ -9,7 +9,7 @@ shows >> N. This is the empirical side of the plan assertions in
 tests/test_plans.py — run it after touching any dedup/contamination/join
 shape.
 
-Usage: python scripts/scale_probe.py [N] [out_json]
+Usage: python scripts/scale_probe.py [N] [query ...]
 Writes nothing outside /tmp; prints one JSON line with per-query ratios.
 """
 
@@ -19,7 +19,6 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -27,19 +26,6 @@ import duckdb
 
 BASE = "/root/testdata/sf0.1"
 DIMS = ("region", "nation", "customer", "supplier", "part")
-# Builders that run Spark actions at plan-build time (the r15
-# narrow-assign Lloyd family trains via k-row centroid collects): their
-# clock starts before the builder so training is inside the timed region.
-EAGER_BUILD = frozenset({
-    "ivf_train_centroids",
-    "sim_topk_ivf_trained",
-    "sim_topk_ivf_quantized",
-    "sim_topk_ivfpq",
-    "sim_topk_pq",
-    "dedup_semantic",
-    "dedup_semantic_incremental",
-    "embedding_outliers",
-})
 
 PROBE = (
     "wordcount",
@@ -107,8 +93,8 @@ PROBE = (
     "merge_upsert",
     "split_contamination_gate",
     # round-9 additions (streaming ops are excluded by construction: their
-    # builders execute the availableNow replay internally, so this
-    # harness's post-builder timing would measure nothing — their batch
+    # builders execute the availableNow replay internally, so a timing
+    # would measure checkpointed replay, not a plan's scaling — their batch
     # cores ARE merge_upsert and dedup_exact, both probed):
     # compact_plan plans over the file-inventory METADATA (one agg + one
     # single-partition window over O(#files) rows) — expect ~Nx from the
@@ -191,6 +177,10 @@ PROBE = (
     # Nx (same class as the ivf/ivfpq cell-local notes, minus the cell
     # restriction this query deliberately lacks).
     "sim_topk_pq",
+    # r22: dedup_simhash — the packed bit-count aggregation is linear
+    # (~Nx), but VERBATIM copies share every band, so its candidate pairs
+    # grow ~N^2 like dedup_minhash_incremental's; reported against that.
+    "dedup_simhash",
     # r22: cogroup_reconcile — bucketed cogroup (pmod(custkey, B), one
     # vectorized pandas call per bucket): both sides exchange once on
     # the bucket key, per-bucket work is linear in its rows, and B is
@@ -275,8 +265,7 @@ def build_scaled(n: int, out_dir: str) -> None:
 def ensure_scaled(n: int) -> str:
     """Build (or reuse) the cached Nx fixture and return its directory.
     The ONLY place that knows the cache path + '.complete' marker
-    protocol — probe_lloyd_k_sweep.py reuses it so the two probes can
-    never silently measure different fixtures (ADVICE r16). Done-marker,
+    protocol, so every caller measures the same fixture. Done-marker,
     not a table file: an interrupted build must not leave a
     complete-looking cache missing its later tables."""
     scaled_dir = f"/tmp/spark_graft_scale_{n}x"
@@ -289,29 +278,6 @@ def ensure_scaled(n: int) -> str:
     return scaled_dir
 
 
-def time_queries(
-    spark, specs, sf_dir: str, iters: int = 3, probe=PROBE
-) -> dict[str, float]:
-    out = {}
-    for name in probe:
-        best = float("inf")
-        for _ in range(iters):
-            # builder inside the clock for EAGER builders only (the r15
-            # narrow-assign Lloyd family runs its training jobs at
-            # plan-build time); pure-lazy builders keep the historical
-            # exec-only clock — see bench.py's protocol note
-            if name in EAGER_BUILD:
-                t0 = time.perf_counter()
-                df = specs[name].builder(spark, sf_dir)
-            else:
-                df = specs[name].builder(spark, sf_dir)
-                t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        out[name] = round(best, 3)
-    return out
-
-
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 4
     # optional: probe only the named queries (new-operator rounds re-probe
@@ -322,15 +288,19 @@ def main() -> None:
     if unknown:
         sys.exit(f"not in PROBE: {unknown}; choose from {sorted(PROBE)}")
     probe = tuple(sys.argv[2:]) or PROBE
+    from bench import time_query, warm_up
     from multithreaded_mapreduce_library_spark.registry import load_all
     from multithreaded_mapreduce_library_spark.session import get_spark
 
     scaled_dir = ensure_scaled(n)
     spark = get_spark(app_name="scale_probe")
     specs = load_all()
-    specs["agg_stats"].builder(spark, BASE).write.format("noop").mode("overwrite").save()
-    t1 = time_queries(spark, specs, BASE, probe=probe)
-    tn = time_queries(spark, specs, scaled_dir, probe=probe)
+    warm_up(spark, specs, BASE)
+
+    def best_of_3(sf_dir: str) -> dict[str, float]:
+        return {q: round(min(time_query(spark, specs[q], sf_dir, 3)), 3) for q in probe}
+
+    t1, tn = best_of_3(BASE), best_of_3(scaled_dir)
     ratios = {q: round(tn[q] / max(t1[q], 1e-3), 2) for q in probe}
     print(
         json.dumps(

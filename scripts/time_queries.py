@@ -1,12 +1,8 @@
-"""Best-of-N builder+noop timing for arbitrary gated queries, with the
-bench's canary bracket — the per-query measurement tool for gated-only
-queries the HEADLINE bench does not carry (guide §1.4: noop sink so the
-computation is timed, not the sink; §1.5: labelled jobs).
-
-The clock starts BEFORE the builder (conservative: eager-build training
-collects are inside the timed region, like bench.py's EAGER_BUILD rule),
-so numbers here are comparable across builder-restructuring A/Bs even
-when a change moves work between build time and execution time.
+"""Best-of-N timing for arbitrary registered queries, with the bench's
+canary bracket — the per-query measurement tool for gated-only queries
+the HEADLINE bench does not carry. Warm-up and timing are bench.py's
+`warm_up` / `time_query`, so numbers here follow the headline's clock
+rule (builder plus noop-sink execution).
 
 Usage: python scripts/time_queries.py <query> [query ...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
@@ -19,11 +15,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _canary_pair
+from bench import _canary_pair, time_query, warm_up
 from multithreaded_mapreduce_library_spark.registry import load_all
 from multithreaded_mapreduce_library_spark.session import get_spark
 
@@ -34,23 +29,11 @@ def main() -> None:
     iters = int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "3"))
     spark = get_spark(app_name="time_queries")
     specs = load_all()
-    # same warmup as bench.py
-    specs["agg_stats"].builder(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    warm_up(spark, specs, sf_dir)
     start = _canary_pair()
     for name in names:
-        spark.sparkContext.setJobDescription(f"time:{name}")
-        best, runs = float("inf"), []
-        for _ in range(iters):
-            t0 = time.perf_counter()
-            df = specs[name].builder(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            runs.append(round(dt, 3))
-            best = min(best, dt)
-        print(json.dumps({"query": name, "best": round(best, 3), "runs": runs}))
-    spark.sparkContext.setJobDescription(None)
+        runs = [round(t, 3) for t in time_query(spark, specs[name], sf_dir, iters)]
+        print(json.dumps({"query": name, "best": min(runs), "runs": runs}))
     print(json.dumps({"canary_start": start, "canary_end": _canary_pair()}))
     spark.stop()
 

@@ -263,10 +263,19 @@ def test_cogroup_plan_shape(spark, sf_dir):
     custkey — one Python call per key was the measured cost (guide §4.2),
     so a raw-key plan is a performance regression even though its output
     is identical."""
+    import re
+
     plan = formatted_plan(SPECS["cogroup_reconcile"].builder(spark, sf_dir))
-    assert "FlatMapCoGroupsInPandas" in plan
     assert "CartesianProduct" not in plan
-    assert "pmod" in plan, "cogroup key must be the bucketed custkey"
+    # details line: "Arguments: [<left key>], [<right key>], reconcile(...)"
+    node = re.search(r"\) FlatMapCoGroupsInPandas\n(?:.*\n)*?Arguments: (.*)", plan)
+    assert node, "no FlatMapCoGroupsInPandas node"
+    keys = re.findall(r"\[([^\],]+)\]", node.group(1))[:2]
+    assert len(keys) == 2, node.group(1)
+    for key in keys:
+        assert re.search(rf"pmod\([^\n]*\) AS {re.escape(key)}\b", plan), (
+            f"cogroup key {key} must be the bucketed custkey (pmod)"
+        )
 
 
 def test_corpus_curation_broadcasts_drop_list(spark, sf_dir):

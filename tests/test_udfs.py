@@ -10,6 +10,8 @@ scale-adaptive (16 x defaultParallelism) and a deployment override
 
 from __future__ import annotations
 
+import pytest
+
 from multithreaded_mapreduce_library_spark.registry import load_all
 
 SPECS = load_all()
@@ -28,5 +30,17 @@ def test_cogroup_reconcile_invariant_to_bucket_count(spark, sf_dir):
         for b in ("7", "1"):
             spark.conf.set("spark.graft.cogroup.buckets", b)
             assert _rows(SPECS["cogroup_reconcile"].builder(spark, sf_dir)) == base, b
+    finally:
+        spark.conf.unset("spark.graft.cogroup.buckets")
+
+
+@pytest.mark.parametrize("bad", ["0", "-3", "abc"])
+def test_cogroup_bucket_override_must_be_positive(spark, sf_dir, bad):
+    """B=0 would make every pmod key NULL (one bucket); a non-integer
+    must fail by naming the conf key, not with a bare int() error."""
+    spark.conf.set("spark.graft.cogroup.buckets", bad)
+    try:
+        with pytest.raises(ValueError, match="spark.graft.cogroup.buckets"):
+            SPECS["cogroup_reconcile"].builder(spark, sf_dir)
     finally:
         spark.conf.unset("spark.graft.cogroup.buckets")
