@@ -9,7 +9,10 @@ strategies (broadcast vs sort-merge, codegen, pushdown) per deployment.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -17,6 +20,27 @@ from pyspark.sql import SparkSession
 # The directory holding this package; Python workers import from it.
 PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 DAEMON_MODULE = "multithreaded_mapreduce_library_spark.pyworker"
+
+
+_socket_dir: str | None = None
+
+
+def socket_dir() -> str:
+    """This process's directory for the Python workers' Unix domain sockets,
+    made on first use and removed at exit.
+
+    It is a ``mkdtemp`` directory under ``/tmp``, so it has mode 0700. That
+    mode is the access control: Spark skips its socket-secret handshake on
+    Unix sockets. ``/tmp`` and not ``$TMPDIR`` or ``java.io.tmpdir``,
+    because Spark names each socket ``<dir>/.<uuid4>.sock`` (43 more bytes)
+    and the whole path must fit ``sun_path``'s 107 bytes; a temp dir under
+    a deep checkout does not.
+    """
+    global _socket_dir
+    if _socket_dir is None:
+        _socket_dir = tempfile.mkdtemp(prefix="sg-", dir="/tmp")
+        atexit.register(shutil.rmtree, _socket_dir, ignore_errors=True)
+    return _socket_dir
 
 
 def default_cpus() -> int:
@@ -61,6 +85,17 @@ def get_spark(
       before any value passed in ``extra_conf``. ``local[N]`` workers
       share the driver's file system, so they import the package (and
       its daemon) from any working directory.
+    - ``spark.python.unix.domain.socket.enabled``: the JVM talks to the
+      Python workers over Unix domain sockets in :func:`socket_dir`, not
+      over loopback TCP, where each task's input waited out a
+      Nagle/delayed-ACK stall of about 40 ms. On a 4-CPU host
+      (``local[4]``) a job of 40 empty Python tasks went 562 → 230 ms
+      and one of 10 tasks 194 → 116 ms. ``local[N]`` workers share the
+      driver's ``/tmp``.
+    - ``spark.sql.legacy.parquet.nanosAsLong``: ``events`` may store
+      nanosecond timestamps (``sources.normalize_events_ts``). Setting it
+      here means loading ``events`` does not change the session's conf,
+      nor the schema memo key of tables loaded after it.
     """
     cpus = cpus or default_cpus()
     shuffle_partitions = shuffle_partitions or cpus
@@ -85,6 +120,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         .config("spark.python.daemon.module", DAEMON_MODULE)
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", socket_dir())
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     conf = dict(extra_conf or {})
     pythonpath = [PACKAGE_PARENT, conf.pop("spark.executorEnv.PYTHONPATH", "")]

@@ -903,11 +903,12 @@ def test_merge_upsert_single_keyed_join(spark, sf_dir):
 def test_graph_pagerank_builds_without_driver_actions(spark, sf_dir):
     """Pin the r7 declarative rewrite: constructing the pagerank plan —
     per-iteration rank frames and the 1-row node-count broadcast
-    included — must launch NO Spark job beyond the two parquet
+    included — must launch NO Spark job beyond the parquet
     schema-inference reads its load_table calls share with every other
-    builder (the old version ran a driver-side count per build, one
-    extra job). Job groups bracket a bare load_table baseline and the
-    build; explain must execute nothing."""
+    builder (none once load_table has memoized the schemas; the old
+    version ran a driver-side count per build, one extra job). Job
+    groups bracket a bare load_table baseline and the build; explain
+    must execute nothing."""
     from multithreaded_mapreduce_library_spark.sources import load_table
 
     sc = spark.sparkContext

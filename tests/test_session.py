@@ -1,9 +1,11 @@
-"""Session factory: CPU default, the package's Python worker daemon, and
-running from a foreign working directory."""
+"""Session factory: CPU default, the package's Python worker daemon, Unix
+domain sockets for the workers, and running from a foreign working
+directory."""
 
 from __future__ import annotations
 
 import os
+import stat
 import subprocess
 import sys
 import textwrap
@@ -13,7 +15,7 @@ import zipimport
 import pytest
 
 from multithreaded_mapreduce_library_spark import pyworker
-from multithreaded_mapreduce_library_spark.session import DAEMON_MODULE, PACKAGE_PARENT, default_cpus
+from multithreaded_mapreduce_library_spark.session import DAEMON_MODULE, PACKAGE_PARENT, default_cpus, socket_dir
 
 
 # ---------------------------------------------------------------------------
@@ -94,9 +96,25 @@ def test_python_workers_run_under_package_daemon(spark):
     assert conf.get("spark.executorEnv.PYTHONPATH").split(os.pathsep)[0] == PACKAGE_PARENT
 
 
+def test_python_workers_use_private_unix_socket_dir(spark):
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.python.unix.domain.socket.enabled") == "true"
+    path = conf.get("spark.python.unix.domain.socket.dir")
+    assert path == socket_dir()
+    st = os.stat(path)
+    assert stat.S_ISDIR(st.st_mode) and stat.S_IMODE(st.st_mode) == 0o700
+    assert st.st_uid == os.getuid()
+    # Spark appends "/.<uuid4>.sock" (43 bytes); sun_path holds 107
+    assert len(path.encode()) <= 64
+
+
 def test_facade_job_runs_from_foreign_working_directory(tmp_path):
     """The driver finds the package through ``sys.path`` only; the Python
-    workers still import it (and its daemon) through the session conf."""
+    workers still import it (and its daemon) through the session conf.
+    ``TMPDIR`` and ``java.io.tmpdir`` are too long to hold a socket path,
+    and the socket directory is gone once the driver has exited."""
+    deep = tmp_path / ("d" * 100)
+    deep.mkdir()
     script = tmp_path / "job.py"
     script.write_text(textwrap.dedent(f"""
         import sys
@@ -104,15 +122,21 @@ def test_facade_job_runs_from_foreign_working_directory(tmp_path):
         from multithreaded_mapreduce_library_spark.mapreduce import mr_run, wordcount_mapper, wordcount_reducer
         from multithreaded_mapreduce_library_spark.session import get_spark
 
-        spark = get_spark(cpus=2, extra_conf={{"spark.ui.showConsoleProgress": "false"}})
+        spark = get_spark(cpus=2, extra_conf={{
+            "spark.ui.showConsoleProgress": "false",
+            "spark.driver.extraJavaOptions": "-Djava.io.tmpdir={deep}",
+        }})
+        print(spark.sparkContext.getConf().get("spark.python.unix.domain.socket.dir"))
         rdd = spark.sparkContext.parallelize(["a b", "b c c"], 2)
         print(sorted(mr_run(spark, rdd, wordcount_mapper, wordcount_reducer, num_partitions=3).collect()))
         spark.stop()
     """))
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    env.update(SPARK_GRAFT_DRIVER_MEM="1g", SPARK_LOCAL_DIRS=str(tmp_path))
+    env.update(SPARK_GRAFT_DRIVER_MEM="1g", SPARK_LOCAL_DIRS=str(tmp_path), TMPDIR=str(deep))
     proc = subprocess.run(
         [sys.executable, str(script)], cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
-    assert proc.stdout.strip().splitlines()[-1] == "[('a', 1), ('b', 2), ('c', 2)]"
+    sock_dir, result = proc.stdout.strip().splitlines()[-2:]
+    assert result == "[('a', 1), ('b', 2), ('c', 2)]"
+    assert os.path.isabs(sock_dir) and not os.path.exists(sock_dir)

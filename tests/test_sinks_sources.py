@@ -224,3 +224,79 @@ def test_write_clustered_table_envelopes_and_pruned_read(spark, sf_dir, tmp_path
         .count()
     )
     assert 0 < touched <= 3, touched
+
+
+# ---------------------------------------------------------------------------
+# load_table's schema memo
+# ---------------------------------------------------------------------------
+
+NANOS = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs ``fn`` launches from this thread, counted in a job group
+    of its own after the listener bus has delivered every event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"memo-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_repeat_load_table_launches_no_job(spark, sf_dir):
+    first = load_table(spark, sf_dir, "documents")
+    assert _jobs_launched(spark, lambda: load_table(spark, sf_dir, "documents")) == 0
+    again = load_table(spark, sf_dir, "documents")
+    assert again.schema == first.schema
+    assert again.count() == first.count()
+
+
+def test_rewritten_table_is_read_with_its_new_schema(spark, tmp_path):
+    path = str(tmp_path / "nation.parquet")
+    spark.createDataFrame([(1, "a")], "n_nationkey long, n_name string").write.parquet(path)
+    assert load_table(spark, str(tmp_path), "nation").columns == ["n_nationkey", "n_name"]
+    spark.createDataFrame([(2, 0.5, "x")], "n_nationkey long, n_weight double, n_comment string") \
+        .write.mode("overwrite").parquet(path)
+    df = load_table(spark, str(tmp_path), "nation")
+    assert df.columns == ["n_nationkey", "n_weight", "n_comment"]
+    assert [tuple(r) for r in df.collect()] == [(2, 0.5, "x")]
+
+
+def test_changed_parquet_conf_infers_again(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    key = "spark.sql.parquet.binaryAsString"
+    pq.write_table(pa.table({"r_name": pa.array([b"EUROPE"], type=pa.binary())}),
+                   str(tmp_path / "region.parquet"))
+    dtype = lambda: dict(load_table(spark, str(tmp_path), "region").dtypes)["r_name"]
+    assert dtype() == "binary"
+    spark.conf.set(key, "true")
+    try:
+        assert dtype() == "string"
+    finally:
+        spark.conf.unset(key)
+    assert dtype() == "binary"
+
+
+def test_path_without_stat_loads_through_inference(spark, sf_dir):
+    url = "file://" + os.path.abspath(sf_dir)
+    load_table(spark, url, "region")
+    assert _jobs_launched(spark, lambda: load_table(spark, url, "region")) == 1
+    assert load_table(spark, url, "region").count() == load_table(spark, sf_dir, "region").count()
+
+
+def test_loading_events_leaves_conf_and_memo_alone(spark, sf_dir):
+    """``get_spark`` sets the nanos conf up front, so loading ``events``
+    neither changes the session conf nor the memo key of later loads."""
+    assert spark.sparkContext.getConf().get(NANOS) == "true"
+    load_table(spark, sf_dir, "documents")
+    assert spark.conf.get(NANOS) == "true"
+    load_table(spark, sf_dir, "events")
+    assert _jobs_launched(spark, lambda: load_table(spark, sf_dir, "documents")) == 0
