@@ -4,10 +4,6 @@
 (distwc.c:36-38: 5 workers, 10 partitions) over documents.text and shares
 the flagship word-count oracle — proving the facade computes exactly what
 the DataFrame path computes (and what distwc.c computed).
-
-Both facade queries spread the ``documents`` scan (one row group, so one
-map task) with ``rebalance_scan`` before the Python mapper; the djb2
-reduce layout and the outputs do not depend on the map-side split.
 """
 
 from __future__ import annotations
@@ -20,7 +16,7 @@ from multithreaded_mapreduce_library_spark.operators.text import WORDCOUNT_ORACL
 
 _duck_tokens_expr = duck_tokens('text')
 from multithreaded_mapreduce_library_spark.registry import register
-from multithreaded_mapreduce_library_spark.sources import load_table, rebalance_scan
+from multithreaded_mapreduce_library_spark.sources import load_table
 
 
 @register(
@@ -30,7 +26,7 @@ from multithreaded_mapreduce_library_spark.sources import load_table, rebalance_
     doc="distwc.c word count through the RDD facade (djb2 partitioning, 10 partitions)",
 )
 def mr_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = rebalance_scan(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     lines = docs.select("text").rdd.map(lambda r: r[0])
     return mr_wordcount_df(spark, lines, num_partitions=10)
 
@@ -55,7 +51,7 @@ FROM tok GROUP BY word
 def mr_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from multithreaded_mapreduce_library_spark.mapreduce import mr_run
 
-    docs = rebalance_scan(load_table(spark, sf_dir, "documents"), spark)
+    docs = load_table(spark, sf_dir, "documents")
     rdd = docs.select("doc_id", "text").rdd.map(lambda r: (r[0], r[1]))
 
     def mapper(rec):
